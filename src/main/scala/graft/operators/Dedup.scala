@@ -234,15 +234,35 @@ object Dedup {
                                  bands: Int = 8, shingleN: Int = 3,
                                  batchShingles: Option[DataFrame] = None,
                                  batchBands: Option[DataFrame] = None)
-      : DataFrame = {
+      : DataFrame =
+    minhashNearDupsIncrementalCached(batch, idName, textName,
+      archiveShingles, archiveBands, threshold, k, bands, shingleN,
+      batchShingles, batchBands)._1
+
+  /** [[minhashNearDupsIncremental]] plus the relations it cached on
+    * the way (the batch shingle sets unless the caller passed them, and
+    * the contracted groups and members of a cloned batch). The pairs
+    * read them lazily, so a caller unpersists them once the pairs are
+    * written — a per-trigger caller that does not leaks them, and with
+    * them the broadcast hash relations their plans hold.
+    */
+  private[graft] def minhashNearDupsIncrementalCached(batch: DataFrame,
+      idName: String, textName: String, archiveShingles: DataFrame,
+      archiveBands: DataFrame, threshold: Double, k: Int, bands: Int,
+      shingleN: Int, batchShingles: Option[DataFrame],
+      batchBands: Option[DataFrame]): (DataFrame, Seq[DataFrame]) = {
     require(threshold > 0.0 && threshold <= 1.0)
     val shA = requireShingleN(archiveShingles, shingleN)
     val bandsA = requireBandParams(archiveBands, k, bands)
-    val shB = materialized(batchShingles.map(requireShingleN(_, shingleN))
-      .getOrElse(hashedShingleSets(batch, idName, textName, shingleN)))
+    val shB0 = batchShingles.map(requireShingleN(_, shingleN))
+      .getOrElse(hashedShingleSets(batch, idName, textName, shingleN))
+    val shB = materialized(shB0)
     val (groups, members0) = contractBy(shB, "id", "sh")
     val reps = groups.select(col("rid").as("id"), col("sh"))
     val members = members0.map(materialized)
+    // groups is cached only on the cloned branch, where members exists
+    val cached = (if (shB eq shB0) Nil else Seq(shB)) ++
+      members.toSeq.flatMap(m => Seq(groups, m))
     // `batchBands` contract: exactly `minhashBands(
     // minhashSignaturesFromShingles(shB, k, shingleN), k, bands)` for
     // the SAME batch relation — enforced via the (k, bands) provenance
@@ -290,8 +310,8 @@ object Dedup {
     val selfAll = expandPairs(
       verified(bandSelfCandidates(repBands), reps),
       members, intraValue = lit(1.0), valueName = "jaccard")
-    crossAll.withColumn("vs", lit("archive"))
-      .unionByName(selfAll.withColumn("vs", lit("batch")))
+    (crossAll.withColumn("vs", lit("archive"))
+      .unionByName(selfAll.withColumn("vs", lit("batch"))), cached)
   }
 
   /** Point-serve near-dup LOOKUP — "find this document's near-dups

@@ -1711,16 +1711,19 @@ object Similarity {
     * reading ONLY the code column — the query's own codes come from
     * the code table too (one point lookup), so the float tier is
     * never touched. Same output as [[sq8TopK]] with the same corpus,
-    * bit for bit.
+    * bit for bit. The query id is bound as a [[graft.functions.Param]],
+    * not a literal, so both generated classes (lookup and ranking) are
+    * compiled once per index schema and reused by every later id.
     */
   def sq8TopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                      idName: String, queryId: Long, k: Int): DataFrame = {
     val codes = spark.read.parquet(s"$indexPath/codes")
-    val qRows = codes.filter(col(idName) === queryId)
+    val qid = graft.functions.Param.column(queryId)
+    val qRows = codes.filter(col(idName) === qid)
       .select(col("codes")).take(1)
     require(qRows.nonEmpty, s"sq8TopKIndexed: query $idName=$queryId not in index")
     val q = qRows.head.getAs[Array[Byte]](0)
-    codes.filter(col(idName) =!= queryId)
+    codes.filter(col(idName) =!= qid)
       .select(col(idName),
         graft.functions.VecFns.sq8Dot(col("codes"), lit(q)).as("qscore"))
       .orderBy(col("qscore").desc, col(idName).asc)

@@ -799,13 +799,18 @@ object StreamOps {
     // side is the cached shingle relation, a narrow dependency); the
     // exchange is pair-relation-sized, i.e. tiny
     // the three effect writes have disjoint outputs and share only the
-    // cached shB/bdB relations — run them concurrently (inParallel)
+    // cached shB/bdB relations — run them concurrently (inParallel).
+    // The pair write is the only reader of the contraction relations
+    // the near-dup step caches, so it releases them itself.
     inParallel(
-      () => Dedup.minhashNearDupsIncremental(batch, idName, textName,
-          archSh, archBd, threshold, k, bands, shingleN,
+      () => {
+        val (pairs, cached) = Dedup.minhashNearDupsIncrementalCached(batch,
+          idName, textName, archSh, archBd, threshold, k, bands, shingleN,
           batchShingles = Some(shB), batchBands = Some(bdB))
-        .repartition(genParts)
-        .write.mode("overwrite").parquet(s"$stateDir/pairs/batch=$bid"),
+        try pairs.repartition(genParts)
+          .write.mode("overwrite").parquet(s"$stateDir/pairs/batch=$bid")
+        finally cached.foreach(_.unpersist())
+      },
       () => shB.coalesce(genParts).write.mode("overwrite")
         .parquet(s"$shDir/batch=$bid"),
       () => bdB.coalesce(genParts).write.mode("overwrite")
@@ -939,9 +944,10 @@ object StreamOps {
     // pair's GREATER id drops (ascending-id ingest ⇒ later side)
     val archSh = arch(s"$stateDir/shingles", shB.limit(0))
     val archBd = arch(s"$stateDir/bands", bdB.limit(0))
-    val ndDrop = Dedup.minhashNearDupsIncremental(batch, idName, textName,
-        archSh, archBd, threshold, k, bands, shingleN,
-        batchShingles = Some(shB), batchBands = Some(bdB))
+    val (ndPairs, ndCached) = Dedup.minhashNearDupsIncrementalCached(batch,
+      idName, textName, archSh, archBd, threshold, k, bands, shingleN,
+      batchShingles = Some(shB), batchBands = Some(bdB))
+    val ndDrop = ndPairs
       .select(greatest(col("id_a"), col("id_b")).as(idName)).distinct()
     val survivors = batch
       .join(s1, Seq(idName), "left_semi")
@@ -971,6 +977,7 @@ object StreamOps {
         .parquet(s"$stateDir/shingles/batch=$bid"),
       () => bdB.write.mode("overwrite").parquet(s"$stateDir/bands/batch=$bid"))
     survivors.unpersist(); shB.unpersist(); bdB.unpersist()
+    ndCached.foreach(_.unpersist())
     ()
   }
 

@@ -504,6 +504,20 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("not in index"))
   }
 
+  test("sq8TopKIndexed: a new query id reuses the compiled classes") {
+    val dir = java.nio.file.Files.createTempDirectory("sq8param").toString + "/idx"
+    Similarity.ensureSq8Index(emb, "vec_id", "embedding", dir)
+    def topK(q: Long) = Similarity.sq8TopKIndexed(spark, dir, "vec_id", q, 5)
+      .as[(Long, Long)].collect().toSeq
+    topK(1L)
+    val (compiled, got) = compiling(topK(2L))
+    assert(compiled == 0,
+      s"a second query id compiled $compiled classes: the id is inlined into generated code")
+    // the bound id still selects and excludes the query row
+    assert(got == Similarity.sq8TopK(emb, "vec_id", "embedding", 2L, 5)
+      .as[(Long, Long)].collect().toSeq)
+  }
+
   test("SQ8 append: frozen-scale coding is bit-identical to coding the union; clipping batches rejected") {
     val dir = java.nio.file.Files.createTempDirectory("sq8append").toString + "/idx"
     Similarity.ensureSq8Index(emb, "vec_id", "embedding", dir)

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.{Event, Session}
@@ -14,6 +14,29 @@ class StreamOpsSpec extends SparkSpec {
 
   private def ev(id: Long, sec: Long, user: Long, typ: String = "click"): Event =
     Event(id, new Timestamp(sec * 1000L), user, typ, 1.0)
+
+  /** Land `df` as ONE new parquet file `name.parquet` in a file-source
+    * stream directory (staged elsewhere, then moved in, so the stream
+    * never lists a half-written file).
+    */
+  private def landFile(df: org.apache.spark.sql.DataFrame, streamDir: String,
+                       name: String): Unit = {
+    val stage = java.nio.file.Files.createTempDirectory("graft_stage").toString + "/out"
+    df.coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(streamDir))
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(streamDir, s"$name.parquet"))
+  }
+
+  /** One `Trigger.AvailableNow` run of a sink over a file-source
+    * stream; returns once every landed file is processed.
+    */
+  private def availableNow(src: String, schema: org.apache.spark.sql.types.StructType)(
+      sink: (org.apache.spark.sql.DataFrame, Option[Trigger]) => StreamingQuery): Unit = {
+    sink(spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(src), Some(Trigger.AvailableNow())).awaitTermination()
+  }
 
   test("hourlyCounts over MemoryStream matches the batch run") {
     implicit val sc = spark.sqlContext
@@ -730,6 +753,52 @@ class StreamOpsSpec extends SparkSpec {
       StreamOps.sq8IngestBatch(hot, 2L, idx, "vec_id", "embedding")
     }
     assert(e.getMessage.contains("codes would clip"))
+  }
+
+  test("neardupSink and sq8CodesSink triggers release every relation they cache") {
+    import graft.operators.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_release").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    Similarity.initSq8Scales(emb, "embedding", s"$dir/idx")
+    (0 until 3).foreach { b =>
+      val part = docs.filter(col("doc_id") % 3 === b)
+      // exact clones make the near-dup step contract the batch: the
+      // path that caches its groups and members relations
+      landFile(part.unionByName(
+          part.limit(5).withColumn("doc_id", col("doc_id") + 1000000L)),
+        s"$dir/docs", s"b$b")
+      landFile(emb.filter(col("vec_id") % 3 === b), s"$dir/emb", s"b$b")
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    availableNow(s"$dir/docs", docs.schema)((df, t) => StreamOps.neardupSink(
+      df, s"$dir/state", "doc_id", "text", s"$dir/ckD", t))
+    availableNow(s"$dir/emb", emb.schema)((df, t) => StreamOps.sq8CodesSink(
+      df, s"$dir/idx", "vec_id", "embedding", s"$dir/ckE", t))
+    assert(StreamOps.committedFrontier(spark, s"$dir/ckD") == 2L)
+    assert(spark.read.parquet(s"$dir/idx/codes").count() == emb.count())
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"triggers left ${left.size} persisted RDDs behind")
+  }
+
+  test("a second AvailableNow run over a batch of the same shape compiles no class") {
+    import graft.operators.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_codegen").toString
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    Similarity.initSq8Scales(emb, "embedding", s"$dir/idx")
+    def run(): Unit = availableNow(s"$dir/emb", emb.schema)((df, t) =>
+      StreamOps.sq8CodesSink(df, s"$dir/idx", "vec_id", "embedding", s"$dir/ck", t))
+    landFile(emb.filter(col("vec_id") % 2 === 0), s"$dir/emb", "b0")
+    run()
+    landFile(emb.filter(col("vec_id") % 2 === 1), s"$dir/emb", "b1")
+    // each run is a new streaming query on a cloned session; the
+    // codegen cache hits only while the session's classloader is
+    // shared (Sessions.tuned turns artifact isolation off)
+    val (compiled, _) = compiling(run())
+    assert(compiled == 0, s"the second run compiled $compiled classes")
+    assert(spark.read.parquet(s"$dir/idx/codes").count() == emb.count())
   }
 
   test("semanticDedupBatch: streamed survivors equal the frozen batch device; cross-batch dup caught; replay idempotent; guards loud") {
