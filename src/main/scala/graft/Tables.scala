@@ -83,19 +83,35 @@ final class Tables(spark: SparkSession, dir: String) {
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** Resolve-once parquet relations, keyed (session, path). Plans
-    * only — never results or cached blocks — so this is catalog
-    * state, not data state. Bounded like JlProject's matrix cache:
-    * past [[MaxResolved]] distinct relations the map clears wholesale
-    * (a post-clear miss merely re-resolves), keeping a long-lived JVM
-    * serving many sessions from retaining dead sessions' plans.
+  /** Resolve-once parquet relations, keyed (session, path): the
+    * fact tables and the persisted artifacts read through them (the
+    * KG association index). Plans only — never results or cached
+    * blocks — so this is catalog state, not data state. Bounded like
+    * JlProject's matrix cache: past [[MaxResolved]] distinct
+    * relations the map clears wholesale (a post-clear miss merely
+    * re-resolves), keeping a long-lived JVM serving many sessions
+    * from retaining dead sessions' plans.
+    *
+    * `ensure` publishes the artifact at `path` on a miss. It runs
+    * before the insert, not inside `computeIfAbsent`: an artifact
+    * build resolves its own source tables through this same map, and
+    * a ConcurrentHashMap mapping function must not update its map
+    * (a recursive update throws). `Artifact.ensure` builds exactly
+    * once under concurrent callers, so two racing misses still
+    * publish one artifact.
     */
   private val MaxResolved = 512
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
-  private[graft] def resolved(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def resolved(spark: SparkSession, path: String,
+                              ensure: => Unit = ()): DataFrame = {
     val k = (spark, path)
-    if (cache.size >= MaxResolved && !cache.containsKey(k)) cache.clear()
-    cache.computeIfAbsent(k, _ => spark.read.parquet(path))
+    val hit = cache.get(k)
+    if (hit != null) hit
+    else {
+      ensure
+      if (cache.size >= MaxResolved) cache.clear()
+      cache.computeIfAbsent(k, _ => spark.read.parquet(path))
+    }
   }
 }

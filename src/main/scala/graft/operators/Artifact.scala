@@ -4,6 +4,9 @@ import java.io.File
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 import java.util.UUID
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{format_string, raise_error}
+
 /** Atomic publish-once protocol for persisted derived artifacts
   * (cluster labels, IVF indexes, shingle relations).
   *
@@ -112,6 +115,47 @@ object Artifact {
       } finally deleteRecursively(new File(tmp))
     }
   }
+
+  /** Prefix of every in-row guard message: [[guarded]] recognizes a
+    * fired guard by it, never by the wording of its payload.
+    */
+  val GuardSentinel = "GRAFT_GUARD:"
+
+  /** An in-row guard: `raise_error` with a `format_string` message
+    * that carries [[GuardSentinel]]. Casts to whatever type the
+    * violating branch must have.
+    */
+  def guardError(format: String, args: Column*): Column =
+    raise_error(format_string(GuardSentinel + format, args: _*))
+
+  /** Run a job whose plan carries [[guardError]] guards, rethrowing a
+    * fired guard as the `IllegalArgumentException` a pre-flight
+    * `require` would throw. Folded into the write, a guard costs one
+    * expression per row and no job of its own, and still fires before
+    * anything commits: a raised row aborts the task, the job, and the
+    * committer's temporary output. Spark wraps the raise in task- and
+    * job-level exceptions whose messages quote it inside their own
+    * ("Job aborted due to stage failure: ..."), so the payload comes
+    * from the innermost cause carrying the sentinel, cut at its line
+    * end and stripped of Spark's SQLSTATE suffix. Anything without the
+    * sentinel propagates unchanged.
+    */
+  def guarded[A](body: => A): A =
+    try body catch {
+      case e: Throwable =>
+        val carrier = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .take(64).filter(c => Option(c.getMessage).exists(_.contains(GuardSentinel)))
+          .toSeq.lastOption
+        carrier match {
+          case None => throw e
+          case Some(c) =>
+            val m = c.getMessage
+            val payload = m.substring(m.indexOf(GuardSentinel) + GuardSentinel.length)
+              .linesIterator.next()
+              .replaceFirst("\\s*SQLSTATE: \\w+\\s*$", "").trim
+            throw new IllegalArgumentException(payload, e)
+        }
+    }
 
   /** URI-capable directory-existence check via the Hadoop FileSystem
     * API — for operators whose data I/O is already `spark.read` /

@@ -1034,17 +1034,17 @@ object Similarity {
     val dim = books.size * books.head.head.length
     // both guards ride the append job (in-row dim raise + id-clash
     // union subtree) — they were two dedicated jobs per append and
-    // still reject before any file lands (guardedJob)
+    // still reject before any file lands (Artifact.guarded)
     val codes = when(size(col(vecName)) =!= dim,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendPqIndex: batch has dimension %d but the codebooks " +
             s"encode $dim — not the same embedding space",
-          size(col(vecName)))).cast("array<int>"))
+          size(col(vecName))).cast("array<int>"))
       .otherwise(pqEncode(col(vecName), books))
     val out = withIdsDisjointGuard(
       newEmbeddings.select(col(idName), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendPqIndex")
-    guardedJob(Seq("not the same embedding space", IdsDisjointMarker)) {
+    Artifact.guarded {
       out.write.mode("append").parquet(s"$indexPath/codes")
     }
   }
@@ -1578,31 +1578,6 @@ object Similarity {
     }
   }
 
-  /** Run an append/write whose plan carries in-row `raise_error`
-    * guards, rethrowing a fired guard as the IllegalArgumentException
-    * the pre-flight `require` form threw. The guards were dedicated
-    * jobs per append (dim take(1), clip posexplode aggregations, the
-    * id-disjointness semi-join); folded into the append job they cost
-    * one expression per row and zero extra job round-trips, and they
-    * still reject BEFORE any file lands — a raised row aborts the
-    * task, the job, and the committer's temporary output, so in
-    * append mode the existing table is untouched and nothing new
-    * commits.
-    */
-  private def guardedJob[A](markers: Seq[String])(body: => A): A =
-    try body catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null) {
-          val m = c.getMessage
-          if (m != null && markers.exists(m.contains))
-            throw new IllegalArgumentException(
-              m.stripPrefix("[USER_RAISED_EXCEPTION] ").trim, e)
-          c = c.getCause
-        }
-        throw e
-    }
-
   /** Shared append guard, as a zero-row-unless-violated subtree to
     * union onto the append write: a replayed/overlapping batch would
     * silently duplicate rows in a code/vector table and every serve
@@ -1620,15 +1595,14 @@ object Similarity {
         Seq(idName), "left_semi")
     val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
       if (i == 0)
-        raise_error(format_string(
+        Artifact.guardError(
           s"$caller: batch re-ingests indexed $idName %s — id spaces " +
-            "must be disjoint", col(idName).cast("string")))
+            "must be disjoint", col(idName).cast("string"))
           .cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
     out.unionByName(clash.select(cols.toSeq: _*))
   }
-  private val IdsDisjointMarker = "id spaces must be disjoint"
 
   /** First clipping (dim, |x|) pair of a row against frozen per-dim
     * scales, for the SQ8 appends' in-row clip guards: empty when the
@@ -1671,29 +1645,28 @@ object Similarity {
     // all three guards ride the append job (in-row dim/clip raises +
     // id-clash union subtree) — they were a posexplode aggregation
     // and a semi-join job per append; still reject before any file
-    // lands (guardedJob)
+    // lands (Artifact.guarded)
     val viol = sq8ClipViolation(col(vecName), scales)
     val codes = when(size(col(vecName)) > scales.length,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendSq8Index: batch has dimension %d beyond the index's " +
             s"${scales.length} — not the same embedding space",
-          size(col(vecName)) - 1)).cast("binary"))
+          size(col(vecName)) - 1).cast("binary"))
       .when(size(viol) > 0,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendSq8Index: batch max |x_%d| = %.6g exceeds the frozen " +
             "scale %.6g — codes would clip; rebuild the index over the " +
             "union instead",
           element_at(viol, 1).getField("d"),
           element_at(viol, 1).getField("m"),
           element_at(typedlit(scales.toSeq),
-            element_at(viol, 1).getField("d") + 1))).cast("binary"))
+            element_at(viol, 1).getField("d") + 1)).cast("binary"))
       .otherwise(graft.functions.VecFns.packInt8(
         sq8Quantize(col(vecName), scales)))
     val out = withIdsDisjointGuard(
       newEmbeddings.select(col(idName), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendSq8Index")
-    guardedJob(Seq("not the same embedding space", "codes would clip",
-        IdsDisjointMarker)) {
+    Artifact.guarded {
       out.write.mode("append").parquet(s"$indexPath/codes")
     }
   }
@@ -1806,18 +1779,18 @@ object Similarity {
     // all three guards ride the append job (the appendSq8Index fold)
     val viol = sq8ClipViolation(col(vecName), scales)
     val codes = when(size(col(vecName)) > scales.length,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendIvfSq8Index: batch dimension %d beyond the index's " +
             s"${scales.length} — not the same embedding space",
-          size(col(vecName)) - 1)).cast("binary"))
+          size(col(vecName)) - 1).cast("binary"))
       .when(size(viol) > 0,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendIvfSq8Index: batch max |x_%d| = %.6g exceeds the " +
             "frozen scale %.6g — codes would clip; rebuild over the union",
           element_at(viol, 1).getField("d"),
           element_at(viol, 1).getField("m"),
           element_at(typedlit(scales.toSeq),
-            element_at(viol, 1).getField("d") + 1))).cast("binary"))
+            element_at(viol, 1).getField("d") + 1)).cast("binary"))
       .otherwise(graft.functions.VecFns.packInt8(
         sq8Quantize(col(vecName), scales)))
     val out = withIdsDisjointGuard(
@@ -1825,8 +1798,7 @@ object Similarity {
         .withColumn("__cid", nearestCid(col(vecName), cents))
         .select(col(idName), col("__cid"), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendIvfSq8Index")
-    guardedJob(Seq("not the same embedding space", "codes would clip",
-        IdsDisjointMarker)) {
+    Artifact.guarded {
       out.write.mode("append").partitionBy("__cid")
         .parquet(s"$indexPath/codes")
     }
@@ -2182,16 +2154,16 @@ object Similarity {
     // dedicated take(1) job): the target is a NEW index directory, so
     // unlike the rebin path there is no prior state an aborted
     // overwrite could destroy, and the guard still fires before
-    // anything commits (guardedJob rethrows the original
+    // anything commits (Artifact.guarded rethrows the original
     // IllegalArgumentException)
     val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
+        Artifact.guardError(
           s"buildBinaryIndex: corpus has a vector of dimension %d but " +
             s"the thresholds code ${thr.length} dimensions — ragged " +
             "embedding corpus",
-          size(col(vecName)))).cast("array<bigint>"))
+          size(col(vecName))).cast("array<bigint>"))
       .otherwise(binQuantize(col(vecName), thr))
-    guardedJob(Seq("ragged embedding corpus")) {
+    Artifact.guarded {
       embeddings.select(col(idName), code.as("code"))
         .write.mode("overwrite").parquet(s"$indexPath/codes")
     }
@@ -2313,15 +2285,15 @@ object Similarity {
     val thr = readBinThresholds(spark, indexPath)
     // both guards ride the append job (the appendPqIndex fold)
     val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
+        Artifact.guardError(
           s"appendBinaryIndex: batch has dimension %d but the index " +
             s"codes ${thr.length} — not the same embedding space",
-          size(col(vecName)))).cast("array<bigint>"))
+          size(col(vecName))).cast("array<bigint>"))
       .otherwise(binQuantize(col(vecName), thr))
     val out = withIdsDisjointGuard(
       newEmbeddings.select(col(idName), code.as("code")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendBinaryIndex")
-    guardedJob(Seq("not the same embedding space", IdsDisjointMarker)) {
+    Artifact.guarded {
       out.write.mode("append").parquet(s"$indexPath/codes")
     }
   }

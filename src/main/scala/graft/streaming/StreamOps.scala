@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Artifact
+
 /** Structured Streaming surface. The reference has no streaming
   * (SURVEY.md §2.10); this is north-star capability: the same events
   * schema processed as an unbounded stream with event-time semantics.
@@ -114,31 +116,6 @@ object StreamOps {
       math.max(session, 1)))
     withStatePartitions(spark, w)(body)
   }
-
-  /** Run a write whose plan carries an in-row `raise_error` guard,
-    * rethrowing a fired guard as the `IllegalArgumentException` the
-    * pre-flight `require` form threw (loud-failure type preserved for
-    * callers and specs). The guards were dedicated 1-row jobs per
-    * trigger (a posexplode aggregation, a take(1), a semi-join probe);
-    * folded into the state-write job they cost one expression per row
-    * and ZERO extra job round-trips (guide §1.2 — stop paying whole
-    * jobs for 1-row answers), and they still fire BEFORE anything
-    * commits: a raised row aborts the task, the job, and the parquet
-    * committer's temporary output.
-    */
-  private def guardedWrite(marker: String)(write: => Unit): Unit =
-    try write catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null) {
-          val m = c.getMessage
-          if (m != null && m.contains(marker))
-            throw new IllegalArgumentException(
-              m.stripPrefix("[USER_RAISED_EXCEPTION] ").trim, e)
-          c = c.getCause
-        }
-        throw e
-    }
 
   /** Tumbling event-time window counts with a watermark: late events
     * beyond 1 hour are dropped and state is bounded — the property
@@ -447,15 +424,15 @@ object StreamOps {
       p => p.getField("d") >= lit(scales.length) ||
         p.getField("m") > element_at(scLit, p.getField("d") + 1))
     val codes = when(size(viol) > 0,
-        raise_error(format_string(
+        Artifact.guardError(
           s"sq8CodesSink batch $bid: |x_%d| = %.6g outside the frozen " +
             s"scales (dim count ${scales.length}) — codes would clip; " +
             "re-plan the scales and rebuild",
           element_at(viol, 1).getField("d"),
-          element_at(viol, 1).getField("m"))).cast("binary"))
+          element_at(viol, 1).getField("m")).cast("binary"))
       .otherwise(graft.functions.VecFns.packInt8(
         graft.operators.Similarity.sq8Quantize(col(vecName), scales)))
-    guardedWrite("codes would clip") {
+    Artifact.guarded {
       batch.select(col(idName), codes.as("codes"))
         .write.mode("overwrite").parquet(s"$indexPath/codes/batch=$bid")
     }
@@ -505,12 +482,12 @@ object StreamOps {
     val thr = thr0.getOrElse(
       graft.operators.Similarity.readBinThresholds(spark, indexPath))
     val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
+        Artifact.guardError(
           s"binCodesSink batch $bid: a vector has dimension %d but the " +
             s"index codes ${thr.length} — not the same embedding space",
-          size(col(vecName)))).cast("array<bigint>"))
+          size(col(vecName))).cast("array<bigint>"))
       .otherwise(graft.operators.Similarity.binQuantize(col(vecName), thr))
-    guardedWrite("not the same embedding space") {
+    Artifact.guarded {
       batch.select(col(idName), code.as("code"))
         .write.mode("overwrite").parquet(s"$indexPath/codes/batch=$bid")
     }
@@ -716,16 +693,16 @@ object StreamOps {
     // clash row raises DURING the writes, before either job commits
     // (exactly the pre-flight guard's nothing-written-on-clash
     // semantics, minus its job round-trip). Same loud
-    // IllegalArgumentException via guardedWrite.
+    // IllegalArgumentException via Artifact.guarded.
     val clashIds = rowsShared.select(col("id"))
       .join(arch.select(col("id")), Seq("id"), "left_semi")
     def withClashGuard(df: DataFrame): DataFrame = {
       val guardCols = df.schema.fields.zipWithIndex.map { case (f, i) =>
         if (i == 0)
-          raise_error(format_string(
+          Artifact.guardError(
             s"semanticDedupBatch: batch $bid re-delivers already-ingested " +
               "id %s — generations' id spaces must be disjoint (a retry " +
-              "reuses its OWN batch id)", col("id").cast("string")))
+              "reuses its OWN batch id)", col("id").cast("string"))
             .cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
@@ -735,10 +712,10 @@ object StreamOps {
     // disjoint outputs over the shared cached assignment relation —
     // concurrent (inParallel)
     inParallel(
-      () => guardedWrite("re-delivers")(
+      () => Artifact.guarded(
         withClashGuard(rows).repartition(genParts)
           .write.mode("overwrite").parquet(s"$vecsDir/batch=$bid")),
-      () => guardedWrite("re-delivers")(
+      () => Artifact.guarded(
         withClashGuard(kept).repartition(genParts)
           .write.mode("overwrite").parquet(s"$stateDir/kept/batch=$bid")))
     rowsShared.unpersist()

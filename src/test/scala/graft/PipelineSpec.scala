@@ -40,6 +40,17 @@ class PipelineSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("query records: 256 unique names, every oracle non-empty") {
+    // the derived maps would silently keep only one of two records
+    // sharing a name, so count the records themselves
+    val names = SparkEntry.records.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, v) if v.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+    assert(names.size == 256)
+    val blank = SparkEntry.records.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"empty oracle: $blank")
+  }
+
   test("all queries run on sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sfDir).count()

@@ -33,7 +33,7 @@ object ProbeQ199 {
     (1 to 2).foreach { rep =>
       println(s"[probe] ---- rep $rep ----")
       val src = sec("ensureDocBacklog") {
-        // replicate SparkEntry.ensureDocBacklog via reflection-free
+        // replicate StreamingQueries.docBacklog via reflection-free
         // copy: the artifact already exists after the warm run, so
         // just reuse the fixture the registry created — cheapest way
         // is to re-run the registry body in stages below instead.
@@ -46,7 +46,7 @@ object ProbeQ199 {
       val scratch = java.nio.file.Files
         .createTempDirectory("probe_q199").toString
       val backlog = {
-        // same construction as SparkEntry.ensureDocBacklog — find the
+        // same construction as StreamingQueries.docBacklog — find the
         // existing artifact dir under /tmp
         val tmpdir = new java.io.File(
           System.getProperty("java.io.tmpdir"))
@@ -73,7 +73,7 @@ object ProbeQ199 {
         val pairs = acc.select(
             least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-        // the exact side off the persisted artifact, as in SparkEntry
+        // the exact side off the persisted artifact, as in the q199 record
         val exact = graft.operators.Dedup.ensureJaccardPairs(
           graft.Tables(spark, dir).documents, "doc_id", "text",
           n = 3, threshold = 0.6, maxShingleFreq = Long.MaxValue,

@@ -25,7 +25,7 @@ object ProbeQ30 {
     (1 to 2).foreach { rep =>
       println(s"[probe] ---- rep $rep ----")
       val sh0 = tstage("artifact read plan") {
-        // same path SparkEntry.sharedShingles resolves
+        // same path queries.Support.sharedShingles resolves
         val docs = graft.Tables(spark, dir).documents
         graft.operators.Dedup.ensureShingleSets(docs, "doc_id", "text", 3,
           s"${System.getProperty("java.io.tmpdir")}/graft_probe_shingles_q30")
